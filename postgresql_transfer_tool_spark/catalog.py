@@ -134,22 +134,26 @@ def _parquet_files(path: str) -> list[str]:
     return sorted(out)
 
 
-def table_row_count(sf_dir: str, name: str) -> int:
+def table_row_count(path: str, name: str | None = None) -> int:
     """Exact row count from parquet footer metadata — no data scan.
+
+    Counts table ``name`` under the directory ``path``, or, with
+    ``name`` omitted, the parquet file or dataset at ``path`` itself
+    (the transfer pipeline's commit check on a staged write).
 
     The statistics source for size-adaptive operators (LSH bit width,
     IVF cell count): reading the footer costs milliseconds regardless of
     table size, where a ``df.count()`` at 100 TB is a full scan job just
     to learn n. Parquet footers store num_rows exactly (not an
     estimate), so sizing decisions are identical to the count() they
-    replace. Handles both single files and directory-style datasets.
+    replace. Handles single files, directory-style and partitioned
+    datasets.
     """
     import pyarrow.parquet as pq
 
-    return sum(
-        pq.ParquetFile(f).metadata.num_rows
-        for f in _parquet_files(table_path(sf_dir, name))
-    )
+    if name is not None:
+        path = table_path(path, name)
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
 
 
 #: path → (file identity token, row groups counted, count_is_complete).

@@ -9,20 +9,20 @@ workload needs the full join family. Scale notes per query inline.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import FIXTURE_FOREIGN_KEYS, load_table
 from ..functions.exact import dec
+from ..transfer import fk_orphan_counts
 from .registry import query
 from .relational import dd
 
 # ---------------------------------------------------------------------------
-# C4 — FK orphan validation as a left-anti join, one row per FK edge.
-# At 100 TB: each anti-join shuffles on the FK column only (2 columns
-# read), and dimension sides (region/nation/part/supplier) broadcast.
+# C4 — FK orphan validation as an anti-join, one row per FK edge.
+# At 100 TB: each edge is one exchange of distinct keys from the FK
+# column and the parent key (2 columns read), plus one tiny exchange
+# for all the totals (transfer.fk_orphan_counts).
 # ---------------------------------------------------------------------------
 
 
@@ -45,35 +45,19 @@ def fk_orphan_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark cannot *enforce* FKs (reference phase 3 emits FK DDL,
     ``transfer_data_with_constraints_script.py:138-164``); the engine
     instead *validates* via anti-joins before emitting DDL to an RDBMS
-    target (SURVEY.md §2.5 C4).
+    target (SURVEY.md §2.5 C4). One row per edge, from the same
+    relation the transfer pipelines' FK audit collects.
     """
-    out = []
-    for fk in FIXTURE_FOREIGN_KEYS:
-        col, ref_col = fk.columns[0], fk.ref_columns[0]
-        # Aggregate child rows to (key, row-count) BEFORE the anti-join
-        # (guide §2.3): the shuffle then carries one row per DISTINCT
-        # child key instead of one per child row (map-side partials do
-        # the reduction), and the anti-join probes distinct keys. The
-        # orphan ROW count is recovered as the sum of counts of the
-        # surviving keys — identical to COUNT(*) over anti-joined rows.
-        child = (
-            load_table(spark, sf_dir, fk.table)
-            .select(col)
-            .filter(F.col(col).isNotNull())
-            .groupBy(col)
-            .agg(F.count("*").alias("_rows"))
-        )
-        parent = load_table(spark, sf_dir, fk.ref_table).select(ref_col)
-        orphans = child.join(parent, child[col] == parent[ref_col], "left_anti")
-        out.append(
-            orphans.agg(
-                F.lit(f"{fk.table}.{col}").alias("fk_edge"),
-                F.coalesce(F.sum("_rows"), F.lit(0)).cast("bigint").alias(
-                    "orphan_count"
-                ),
+    return fk_orphan_counts(
+        [
+            (
+                load_table(spark, sf_dir, fk.table),
+                load_table(spark, sf_dir, fk.ref_table),
+                fk,
             )
-        )
-    return reduce(DataFrame.unionByName, out)
+            for fk in FIXTURE_FOREIGN_KEYS
+        ]
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -41,7 +41,7 @@ from __future__ import annotations
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import ForeignKey, TableInfo
@@ -69,11 +69,11 @@ from .sources.pgcopy import (
 from .transfer import (
     TableResult,
     TransferReport,
-    audit_check,
     audit_fk_orphans,
-    audit_primary_key,
-    audit_unique,
+    audit_table,
+    copied_edges,
     fk_ddl_statement,
+    fk_edge,
 )
 from .types import quote_ident, quote_qualified
 
@@ -234,9 +234,10 @@ class PgTransferPipeline:
                 )
 
         # phase 2: copy, tables in parallel (each is bridge-stream →
-        # distributed cast → bulk load), with Spark-side C1-C3 audits on
-        # the in-flight relation. Source DataFrames are kept for the FK
-        # audit phase so parents are not re-streamed.
+        # distributed cast → bulk load), with the Spark-side C1-C3 audit
+        # (one action, transfer.audit_table) on the in-flight relation.
+        # Source DataFrames are kept for the FK audit phase so parents
+        # are not re-streamed.
         dfs: dict[str, object] = {}
         import threading
 
@@ -275,13 +276,16 @@ class PgTransferPipeline:
                         f"DROP TABLE IF EXISTS "
                         f"{quote_qualified(self.target_schema, load_name)} CASCADE",
                     )
+                # the source row count rides the load's own scan
+                obs = Observation(f"pg_copy_{name}")
                 write_table(
-                    df, self.target, self.target_schema, load_name,
+                    df.observe(obs, F.count(F.lit(1)).alias("rows")),
+                    self.target, self.target_schema, load_name,
                     primary_key=info.primary_key,
                     serial_columns=info.serial_columns,
                     scratch_dir=self.scratch_dir,
                 )
-                res.source_rows = df.count()
+                res.source_rows = int(obs.get["rows"])
                 [(cnt,)] = run_sql(
                     self.target,
                     f"SELECT COUNT(*) FROM "
@@ -292,12 +296,10 @@ class PgTransferPipeline:
                     raise RuntimeError(
                         f"row-count mismatch {res.source_rows} != {res.target_rows}"
                     )
-                if info.primary_key:
-                    res.pk_violations = audit_primary_key(df, info.primary_key)
-                for cols in info.unique:
-                    res.unique_violations[", ".join(cols)] = audit_unique(df, cols)
-                for check in info.checks:
-                    res.check_violations[check] = audit_check(df, check)
+                # the live resync (phase 4) reads MAX from the target
+                audit_table(df, replace(info, serial_columns=()), into=res)
+                if res.error:  # a CHECK that cannot be evaluated fails the table
+                    raise RuntimeError(res.error)
                 if self.mode == "swap":
                     # atomic commit LAST — after counts and C1-C3 audits
                     # — so any failure up to here leaves the previous
@@ -338,19 +340,17 @@ class PgTransferPipeline:
 
         # phase 3: FK audit gates FK enforcement — an edge with orphans
         # is recorded but its ALTER TABLE is not attempted (it would
-        # fail wholesale; the reference's per-object DO-block isolation)
+        # fail wholesale; the reference's per-object DO-block isolation);
+        # one audit action per child
         for name, res in report.results.items():
             if res.status != "copied":
                 continue
             info = catalog[name]
-            for fk in info.foreign_keys:
-                parent_res = report.results.get(fk.ref_table)
-                if parent_res is None or parent_res.status != "copied":
-                    continue
-                orphans = audit_fk_orphans(dfs[name], dfs[fk.ref_table], fk)
-                res.fk_orphans[f"{fk.table}.{','.join(fk.columns)}"] = orphans
+            edges = copied_edges(info, report.results)
+            res.fk_orphans.update(audit_fk_orphans(dfs[name], dfs, edges))
+            for fk in edges:
                 ddl = fk_ddl_statement(replace(info, schema=self.target_schema), fk)
-                if orphans == 0:
+                if res.fk_orphans[fk_edge(fk)] == 0:
                     run_sql(self.target, ddl)
                     report.fk_ddl.append(ddl)
 

@@ -483,6 +483,9 @@ def _parse_pg_csv(
         .option("nullValue", NULL_MARKER)
         .option("escape", '"')
         .option("multiLine", "true")
+        # COPY TO STDOUT ends rows with "\n" on every platform; naming
+        # it also stops the parser rewriting a quoted "\r" to "\n"
+        .option("lineSep", "\n")
         .csv(paths)
     )
     return raw.select(*[_from_pg_text(f) for f in result_schema.fields])

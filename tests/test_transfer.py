@@ -44,6 +44,13 @@ def test_constraints_clean_on_fixture(report_and_target):
         assert all(v == 0 for v in r.fk_orphans.values()), r
 
 
+def test_per_phase_timings_recorded(report_and_target):
+    report, _ = report_and_target
+    for t, r in report.results.items():
+        if r.status == "copied":
+            assert r.copy_s > 0 and r.validate_s > 0, (t, r)
+
+
 def test_fk_ddl_emitted(report_and_target):
     report, _ = report_and_target
     # lineitem has 3 FK edges; embeddings excluded so 7 - 0 = 7 edges total
@@ -200,3 +207,40 @@ def test_append_mode_refuses_narrowing_target(spark, sf_dir, tmp_path):
 def test_append_mode_rejects_bad_mode(spark, sf_dir, tmp_path):
     with pytest.raises(ValueError):
         TransferPipeline(spark, sf_dir, str(tmp_path), mode="merge")
+
+
+def test_copy_after_skipped_append_completes(spark, sf_dir, tmp_path):
+    """A copy that registers its row-count observation but never writes
+    (an append skipped by the schema pre-flight) must not block later
+    copies of the same table in the session."""
+    import threading
+
+    from pyspark.sql import functions as F
+
+    target = str(tmp_path / "tgt")
+    not_region = tuple(t for t in TABLES if t != "region")
+    TransferPipeline(spark, sf_dir, target, exclude=not_region).run()
+    path = f"{target}/region.parquet"
+    spark.read.parquet(path).withColumn(
+        "r_regionkey", F.col("r_regionkey").cast("smallint")
+    ).write.mode("overwrite").parquet(f"{target}/narrowed")
+    import shutil
+
+    shutil.rmtree(path)
+    os.rename(f"{target}/narrowed", path)
+    skipped = TransferPipeline(
+        spark, sf_dir, target, exclude=not_region, mode="append"
+    ).run()
+    assert skipped.results["region"].status == "skipped_incompatible"
+
+    reports = []
+    worker = threading.Thread(
+        target=lambda: reports.append(
+            TransferPipeline(spark, sf_dir, str(tmp_path / "fresh"), exclude=not_region).run()
+        ),
+        daemon=True,
+    )
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive(), "copy blocked on a stale row-count observation"
+    assert reports[0].results["region"].status == "copied"
