@@ -147,6 +147,8 @@ def run_once(spark, qs, names, sf_dir: str, attempt: dict) -> dict:
     BENCH_FULL.json holds); ``attempt`` fields are merged into every
     flush so a retried run's artifact says which attempt it is and
     carries the prior attempt's normalizer series as evidence."""
+    from postgresql_transfer_tool_spark.session import codegen_compiles
+
     # checkpoint partial timings every few queries: if the harness kills
     # a long run mid-way, BENCH_FULL.json still holds everything timed
     # so far (marked partial) instead of nothing.
@@ -163,6 +165,8 @@ def run_once(spark, qs, names, sf_dir: str, attempt: dict) -> dict:
             "queries": dict(timings),
             "queries_warm_runs": dict(warm_runs),
             "queries_cold": dict(cold),
+            "queries_codegen_compiles": dict(warm_compiles),
+            "queries_cold_codegen_compiles": dict(cold_compiles),
             "sf": sf_from_dir(sf_dir),
             "n_queries": len(timings),
             "n_failed": sum(1 for t in timings.values() if t < 0),
@@ -180,16 +184,21 @@ def run_once(spark, qs, names, sf_dir: str, attempt: dict) -> dict:
     timings: dict[str, float] = {}
     warm_runs: dict[str, list[float]] = {}
     cold: dict[str, float] = {}
+    # classes compiled during a row's timed runs (codegen-cache misses)
+    warm_compiles: dict[str, int] = {}
+    cold_compiles: dict[str, int] = {}
     normalizers: list[float] = [normalizer_probe()]
     for i, name in enumerate(names):
         fn = qs[name]
         try:
             fn(spark, sf_dir).collect()  # warmup: JVM JIT + file cache
             runs = []
+            c0 = codegen_compiles(spark)
             for _ in range(3):  # median-of-3 (see module docstring)
                 t0 = time.time()
                 fn(spark, sf_dir).collect()
                 runs.append(round(time.time() - t0, 4))
+            warm_compiles[name] = codegen_compiles(spark) - c0
             warm_runs[name] = runs
             timings[name] = sorted(runs)[1]
         except Exception as exc:  # never let one query kill the bench
@@ -208,9 +217,11 @@ def run_once(spark, qs, names, sf_dir: str, attempt: dict) -> dict:
         fn = qs[name]
         try:
             clear_memos()
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             fn(spark, sf_dir).collect()
             cold[name] = round(time.time() - t0, 4)
+            cold_compiles[name] = codegen_compiles(spark) - c0
         except Exception as exc:
             print(f"bench: cold {name} failed: {exc}", file=sys.stderr)
             cold[name] = -1.0
@@ -220,9 +231,11 @@ def run_once(spark, qs, names, sf_dir: str, attempt: dict) -> dict:
     try:
         clear_memos()
         os.environ["SPARK_GRAFT_SHINGLE_HASH"] = "xxhash64"
+        c0 = codegen_compiles(spark)
         t0 = time.time()
         qs["dedup_minhash_lsh"](spark, sf_dir).collect()
         cold["dedup_minhash_lsh[xxhash64]"] = round(time.time() - t0, 4)
+        cold_compiles["dedup_minhash_lsh[xxhash64]"] = codegen_compiles(spark) - c0
     except Exception as exc:
         print(f"bench: xxhash64 variant failed: {exc}", file=sys.stderr)
         cold["dedup_minhash_lsh[xxhash64]"] = -1.0

@@ -17,10 +17,9 @@ only holder of these handles (operators always re-fetch through
 handle elsewhere must copy the data first.
 
 Entries may carry EXTRA checkpointed DataFrames beyond the primary one
-(e.g. the shingle memo's pre-explode checkpoint, which the post-explode
-plan consumes through its RDD lineage and which therefore never appears
-in the post-explode *logical* plan): pass them to ``put`` so eviction
-frees their blocks too.
+(e.g. the shingle memo's post-explode checkpoint beside the per-document
+arrays it was exploded from; ``entry`` returns all of them): pass them
+to ``put`` so eviction frees their blocks too.
 """
 
 from __future__ import annotations
@@ -133,6 +132,13 @@ class CheckpointMemo:
             return None
         self._entries.move_to_end(key)
         return dfs[0]
+
+    def entry(self, key: Hashable) -> tuple[DataFrame, ...] | None:
+        """``get`` for the whole entry: the primary handle, then the
+        extras in ``put`` order."""
+        if self.get(key) is None:
+            return None
+        return self._entries[key]
 
     def put(self, key: Hashable, df: DataFrame, *extra: DataFrame) -> DataFrame:
         """Insert ``df`` (plus any lineage-hidden ``extra`` checkpoints

@@ -7,7 +7,8 @@ values):
 - exact dedup (hash groupBy, keep-min-id)
 - n-gram Jaccard near-dup (shingle self-join — the exact baseline)
 - MinHash + LSH near-dup (16 permutations, 8 bands × 2 rows — the scale
-  path: candidates come from band buckets, not an all-pairs join)
+  path: candidates come from band buckets, not an all-pairs join;
+  signatures and verification read per-document shingle ARRAYS)
 - SimHash near-dup (32-bit signatures, Hamming-distance candidates)
 - survivor selection (greedy keep-lowest-id over the near-dup pair set)
 
@@ -21,7 +22,9 @@ needed at fixture scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import uuid
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -89,46 +92,56 @@ def _spark_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: shingle relation memo, keyed by (applicationId, sf_dir): Jaccard,
-#: MinHash-LSH and SimHash all consume the identical relation — one
-#: materialization per session instead of one per query (r2 bench:
-#: ~7 s each). LRU-bounded with unpersist-on-evict (functions/memo.py,
-#: VERDICT r6 nit #1); the pre-explode checkpoint is registered as an
-#: eviction extra since it hides in the post-explode RDD lineage.
+#: shingle memo, keyed by (applicationId, sf_dir): Jaccard, MinHash-LSH
+#: and SimHash all consume the identical shingles — one materialization
+#: per session instead of one per query (r2 bench: ~7 s each). An entry
+#: is (per-document arrays, exploded rows), both lazy checkpoints;
+#: LRU-bounded with unpersist-on-evict (functions/memo.py, VERDICT r6
+#: nit #1).
 _SHINGLE_CACHE = CheckpointMemo()
 
 
+def _shingle_memo(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, ...]:
+    key = (spark.sparkContext.applicationId, sf_dir)
+    entry = _SHINGLE_CACHE.entry(key)
+    if entry is None:
+        arrays = _spark_shingle_arrays(spark, sf_dir).localCheckpoint(eager=False)
+        entry = (
+            arrays,
+            arrays.select("doc_id", F.explode("shingles").alias("s")).localCheckpoint(
+                eager=False
+            ),
+        )
+        _SHINGLE_CACHE.put(key, *entry)
+    return entry
+
+
+def _spark_shingle_arrays_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, shingles) arrays, computed once and lineage-cut — all
+    the MinHash-LSH chain reads (no step moves one row per shingle)."""
+    return _shingle_memo(spark, sf_dir)[0]
+
+
 def _spark_shingles_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shingle relation, computed once and lineage-cut (localCheckpoint).
+    """(doc_id, s) exploded shingle rows — read by the n-gram Jaccard
+    and SimHash paths — computed once and lineage-cut (localCheckpoint).
 
     Two distinct wins, both load-bearing:
 
-    1. The checkpoint sits BEFORE the explode as well as after it.
-       Catalyst's CollapseProject folds the shingle-array expression
-       into Generate's child, and the generated code re-evaluates that
-       array expression per OUTPUT element — turning an O(tokens) HOF
-       into O(tokens × shingles) per document (measured 7.2 s → 0.3 s
-       at sf0.1 for the explode alone). Materializing the per-doc array
-       relation first makes the explode a plain column read.
-    2. The dedup pipelines consume the exploded relation from 2-3 plan
-       branches (signatures, candidate join sides, per-doc counts); the
+    1. The explode reads the checkpointed ARRAY relation. Catalyst's
+       CollapseProject would otherwise fold the shingle-array
+       expression into Generate's child, and the generated code
+       re-evaluates that array expression per OUTPUT element — turning
+       an O(tokens) HOF into O(tokens × shingles) per document
+       (measured 7.2 s → 0.3 s at sf0.1 for the explode alone).
+    2. Those pipelines consume the exploded relation from 2-3 plan
+       branches (signatures, pair buckets, per-doc counts); the
        post-explode checkpoint stops each branch re-running the scan.
 
     Both checkpoints are per-partition and distributed (no driver
     collect); the memo only holds plan handles.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is None:
-        pre = _spark_shingle_arrays(spark, sf_dir).localCheckpoint(eager=False)
-        cached = _SHINGLE_CACHE.put(
-            key,
-            pre.select("doc_id", F.explode("shingles").alias("s")).localCheckpoint(
-                eager=False
-            ),
-            pre,
-        )
-    return cached
+    return _shingle_memo(spark, sf_dir)[1]
 
 
 #: Shingle-hash selector. ``md5`` (default) is the oracle-parity hash —
@@ -154,14 +167,18 @@ def _shingle_hash_method() -> str:
     return m
 
 
-def _spark_hashed_from(sh: DataFrame) -> DataFrame:
-    """(doc_id, s, h) with h = uniform 32-bit hash of the shingle
-    (md5 prefix for oracle parity, or xxhash64 — see SHINGLE_HASH_ENV)."""
+def _shingle_hash(s: Column) -> Column:
+    """Uniform 32-bit hash of a shingle (md5 prefix for oracle parity,
+    or xxhash64 — see SHINGLE_HASH_ENV)."""
     if _shingle_hash_method() == "xxhash64":
-        h = F.xxhash64("s").bitwiseAND(F.lit(4294967295))
-    else:
-        h = F.conv(F.substring(F.md5("s"), 1, 8), 16, 10).cast("bigint")
-    return sh.withColumn("h", h)
+        return F.xxhash64(s).bitwiseAND(F.lit(4294967295))
+    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
+
+
+def shingle_hash_arrays(arrays: DataFrame) -> DataFrame:
+    """(doc_id, hs) from (doc_id, shingles) arrays: each shingle hashed
+    once, into the per-document array the MinHash kernel reads."""
+    return arrays.select("doc_id", F.transform("shingles", _shingle_hash).alias("hs"))
 
 
 #: DuckDB CTEs producing the same (doc_id, s) / (doc_id, s, h) relations.
@@ -203,30 +220,21 @@ verified AS (
 """
 
 
-def _spark_verify(sh: DataFrame, cand: DataFrame) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs (da, db) against a
-    (materialized) shingle relation."""
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("da"), "s")
-    b = sh.select(F.col("doc_id").alias("db_r"), F.col("s").alias("s_r"))
-    inter = (
-        cand.join(a, "da")
-        .join(b, (F.col("db") == F.col("db_r")) & (F.col("s") == F.col("s_r")))
-        .groupBy("da", "db")
-        .agg(F.count("*").alias("i"))
+def _spark_verify(arrays: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact-Jaccard verification of candidate pairs (da, db): each pair
+    meets its two documents' distinct-shingle arrays and intersects
+    them in-row, moving |A|+|B| shingles and no per-shingle rows."""
+    a = arrays.select(F.col("doc_id").alias("da"), F.col("shingles").alias("sa"))
+    b = arrays.select(F.col("doc_id").alias("db"), F.col("shingles").alias("sb"))
+    inter = cand.join(a, "da").join(b, "db").select(
+        "da", "db", "sa", "sb", F.size(F.array_intersect("sa", "sb")).alias("i")
     )
-    ca = counts.select(F.col("doc_id").alias("da"), F.col("n").alias("na"))
-    cb = counts.select(F.col("doc_id").alias("db"), F.col("n").alias("nb"))
-    return (
-        inter.join(ca, "da")
-        .join(cb, "db")
-        .select(
-            F.col("da").alias("doc_a"),
-            F.col("db").alias("doc_b"),
-            (F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))).alias(
-                "jaccard"
-            ),
-        )
+    return inter.select(
+        F.col("da").alias("doc_a"),
+        F.col("db").alias("doc_b"),
+        (
+            F.col("i").cast("double") / (F.size("sa") + F.size("sb") - F.col("i"))
+        ).alias("jaccard"),
     )
 
 
@@ -354,16 +362,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def minhash_pairs_cte() -> str:
-    """WITH-body producing ``verified(doc_a, doc_b, jaccard)`` — the
-    full corpus-wide shingle → MinHash → band-join → exact-Jaccard
-    chain (UNFILTERED; consumers apply the threshold). Claims CTE
-    names toks/sh/hashed/sigs/sigs2/bands/cand/counts/inter/verified.
-    Shared by the minhash oracle and the cross-modal dedup oracle
-    (operators/semantic.py)."""
+def sql_bands(hashed: str) -> str:
+    """CTEs sigs, sigs2 and bands: the DuckDB MinHash signatures and
+    (doc_id, band_key) rows of the (doc_id, h) relation ``hashed``."""
     mins = ",\n         ".join(
-        f"MIN((h * {A_CONST[j]} + {B_CONST[j]}) % {P_MINHASH}) AS mh{j}"
-        for j in range(N_PERM)
+        f"MIN((h * {a} + {b}) % {P_MINHASH}) AS mh{j}"
+        for j, (a, b) in enumerate(zip(A_CONST, B_CONST))
     )
     bands = ",\n      ".join(
         f"(SELECT '{b}_' || CAST(mh{2 * b} AS VARCHAR) || '_' || CAST(mh{2 * b + 1} AS VARCHAR))"
@@ -371,20 +375,30 @@ def minhash_pairs_cte() -> str:
         for b in range(N_BANDS)
     )
     band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, band{b} AS band_key FROM sigs" for b in range(N_BANDS)
+        f"SELECT doc_id, band{b} AS band_key FROM sigs2" for b in range(N_BANDS)
     )
-    return f"""{_SQL_SHINGLES},
-    sigs AS (
+    return f"""sigs AS (
       SELECT doc_id,
          {mins}
-      FROM hashed GROUP BY doc_id
+      FROM {hashed} GROUP BY doc_id
     ),
     sigs2 AS (
       SELECT doc_id,
       {bands}
       FROM sigs
     ),
-    bands AS ({band_rows.replace("sigs", "sigs2")}),
+    bands AS ({band_rows})"""
+
+
+def minhash_pairs_cte() -> str:
+    """WITH-body producing ``verified(doc_a, doc_b, jaccard)`` — the
+    full corpus-wide shingle → MinHash → band-join → exact-Jaccard
+    chain (UNFILTERED; consumers apply the threshold). Claims CTE
+    names toks/sh/hashed/sigs/sigs2/bands/cand/counts/inter/verified.
+    Shared by the minhash oracle and the cross-modal dedup oracle
+    (operators/semantic.py)."""
+    return f"""{_SQL_SHINGLES},
+    {sql_bands("hashed")},
     cand AS (
       SELECT a.doc_id AS da, b.doc_id AS db
       FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
@@ -403,9 +417,9 @@ def _minhash_sql() -> str:
 
 #: verified LSH pair relation memo, keyed by (applicationId, sf_dir) —
 #: dedup_minhash_lsh / dedup_clusters / dedup_survivors all consume the
-#: same pairs; without the memo each re-runs the full shingle → MinHash →
-#: band-join → verify chain (r1 bench: 3× ~9 s). localCheckpoint keeps
-#: the materialization distributed; the dict only holds plan handles.
+#: same pairs; without the memo each re-runs the _SHINGLE_CACHE arrays →
+#: MinHash → band-join → in-array verify chain. localCheckpoint keeps
+#: the materialization distributed; the memo only holds plan handles.
 _LSH_PAIRS_CACHE = CheckpointMemo()
 
 
@@ -434,39 +448,37 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def minhash_bands_from_hashed(hashed: DataFrame) -> DataFrame:
-    """(doc_id, band_key) LSH band relation from any (doc_id, h)
-    hashed-shingle relation — the shared signature/banding kernel for
-    both the corpus-level `minhash_bands` and the cross-batch index
-    (operators/dedup_index.py). Signature = N_PERM affine-permutation
-    minimums; band key = band index + its 2 signature rows."""
-    sigs = hashed.groupBy("doc_id").agg(
-        *[
-            F.min((F.col("h") * A_CONST[j] + B_CONST[j]) % P_MINHASH).alias(f"mh{j}")
-            for j in range(N_PERM)
-        ]
-    )
-    band_cols = [
-        F.concat_ws(
-            "_", F.lit(str(b)), F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}")
-        ).alias("band_key")
-        for b in range(N_BANDS)
+    """(doc_id, band_key) LSH band relation from (doc_id, hs), each
+    document's array of shingle hashes — the shared signature/banding
+    kernel of the corpus-level `minhash_bands` and the cross-batch
+    index (operators/dedup_index.py). Signature = N_PERM affine-
+    permutation minimums, each a map-side array_min over ``hs``; band
+    key = band index + its 2 signature rows, as DuckDB's ``bands``."""
+    mh = [
+        F.expr(f"array_min(transform(hs, h -> (h * {a} + {b}) % {P_MINHASH}))")
+        for a, b in zip(A_CONST, B_CONST)
     ]
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("band_key")
+    bands = hashed.select(
+        "doc_id",
+        *[
+            F.concat_ws("_", F.lit(str(b)), mh[2 * b], mh[2 * b + 1]).alias(f"band{b}")
+            for b in range(N_BANDS)
+        ],
     )
+    return bands.select("doc_id", F.explode(F.array(*bands.columns[1:])).alias("band_key"))
 
 
 def minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, band_key) relation candidates bucket on — exposed so
     scale sweeps can measure per-band bucket populations (engine work =
     Σ C(pop, 2)) without re-deriving the signature pipeline."""
-    sh = _spark_shingles_materialized(spark, sf_dir)
-    return minhash_bands_from_hashed(_spark_hashed_from(sh))
+    arrays = _spark_shingle_arrays_materialized(spark, sf_dir)
+    return minhash_bands_from_hashed(shingle_hash_arrays(arrays))
 
 
-def _compute_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = _spark_shingles_materialized(spark, sf_dir)
-    bands = minhash_bands(spark, sf_dir)
+def band_pairs(bands: DataFrame) -> DataFrame:
+    """(da, db), da < db: the distinct document pairs sharing a band key
+    of a (doc_id, band_key) relation — the LSH candidates."""
     a = bands.select(F.col("doc_id").alias("da"), "band_key")
     b = bands.select(F.col("doc_id").alias("db"), F.col("band_key").alias("bk2"))
     # the bands relation is O(N_BANDS·n_docs) — UNBOUNDED, so the
@@ -477,7 +489,7 @@ def _compute_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale-safe strategy (partitioned hash join on band_key) at every
     # size; same class of fix as the r5 broadcast-hint sweep, from the
     # opposite direction (AQE choosing broadcast, not a hint forcing it).
-    cand = (
+    return (
         a.join(
             b.hint("shuffle_hash"),
             (F.col("band_key") == F.col("bk2")) & (F.col("da") < F.col("db")),
@@ -485,7 +497,12 @@ def _compute_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("da", "db")
         .distinct()
     )
-    return _spark_verify(sh, cand).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+
+
+def _compute_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cand = band_pairs(minhash_bands(spark, sf_dir))
+    arrays = _spark_shingle_arrays_materialized(spark, sf_dir)
+    return _spark_verify(arrays, cand).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
 
 
 # ---------------------------------------------------------------------------
@@ -534,7 +551,9 @@ def _simhash_sql() -> str:
 
 @query("dedup_simhash", oracle=_simhash_sql())
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hashed = _spark_hashed_from(_spark_shingles_materialized(spark, sf_dir))
+    hashed = _spark_shingles_materialized(spark, sf_dir).withColumn(
+        "h", _shingle_hash(F.col("s"))
+    )
     bit_terms = None
     for b in range(SIMHASH_BITS):
         term = F.when(
@@ -623,10 +642,14 @@ def _clusters_oracle() -> str:
 
 
 def _involved_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, cluster_id) for the documents that appear in at least
-    one verified near-dup pair — the ONLY documents whose component can
-    contain more than one member. Iterative min-label propagation
-    restricted to this involved set (r15, guide §1.2/§2.3): the r14
+    return _counted_cluster_labels(spark, sf_dir)[0]
+
+
+def _counted_cluster_labels(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """((doc_id, cluster_id), row count) for the documents that appear
+    in at least one verified near-dup pair — the ONLY documents whose
+    component can contain more than one member. Iterative min-label
+    propagation restricted to this involved set (r15, guide §1.2/§2.3): the r14
     shape seeded labels with EVERY document, so each of the O(diameter)
     iterations joined, checkpointed and counted a corpus-sized relation
     to propagate labels that only ever change on the pair-involved
@@ -634,7 +657,8 @@ def _involved_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (LSH bucket caps bound the pair count), so every iteration
     now touches O(|pairs|) rows instead of O(|corpus|); singleton
     documents never enter the loop and are attached label = own id by
-    the callers that need them (dedup_clusters' left join)."""
+    the callers that need them (dedup_clusters' left join). Both counts
+    are observed on each iteration's eager checkpoint: no count actions."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     fwd = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     edges = fwd.unionByName(
@@ -658,22 +682,25 @@ def _involved_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         proposed = F.least(
             F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))
         )
-        # eager checkpoint: one materialization serves both the changed
-        # count and the next iteration (no recompute, lineage cut)
-        new_labels = (
+        # eager checkpoint: one materialization serves the counts and
+        # the next iteration (no recompute, lineage cut). Spark keys a
+        # pending observation by name, so each one gets a fresh name.
+        obs = Observation(f"cc_labels_{uuid.uuid4().hex}")
+        labels = (
             labels.join(neighbor_min, "doc_id", "left")
             .select(
                 "doc_id",
                 proposed.alias("cluster_id"),
                 (proposed < F.col("cluster_id")).alias("_changed"),
             )
+            .observe(obs, F.count_if("_changed").alias("changed"), F.count("*").alias("n"))
             .localCheckpoint(eager=True)
+            .drop("_changed")
         )
-        changed = new_labels.filter("_changed").count()
-        labels = new_labels.drop("_changed")
-        if changed == 0:
+        counts = obs.get
+        if counts["changed"] == 0:
             break
-    return labels
+    return labels, counts["n"]
 
 
 @query("dedup_clusters", oracle=_clusters_oracle())
@@ -769,16 +796,16 @@ def dedup_survivors_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tokenize-and-score pass runs over the involved sliver instead
     of the whole corpus, and the cluster relation never materializes
     the corpus-sized singleton tail at all. The id-only involved set is
-    broadcast into the semi-join when it fits (§3.1/§3.2 — counting the
-    already-checkpointed labels is a metadata-cheap job), so the heavy
+    broadcast into the semi-join when it fits (§3.1/§3.2 — the label
+    loop's last observation counts the involved rows), so the heavy
     text column never crosses an exchange; past the bound the join is
     left unhinted (SMJ, with Spark's runtime Bloom filter available)
     rather than risking a multi-GB broadcast."""
     from .text import EN_STOP
 
-    clusters = _involved_cluster_labels(spark, sf_dir)
+    clusters, n_involved = _counted_cluster_labels(spark, sf_dir)
     involved = clusters.select("doc_id")
-    if clusters.count() <= _INVOLVED_BROADCAST_ROWS:
+    if n_involved <= _INVOLVED_BROADCAST_ROWS:
         involved = F.broadcast(involved)
     docs = (
         load_table(spark, sf_dir, "documents")

@@ -67,16 +67,14 @@ from ..functions.index_base import (
 )
 from ..functions.memo import CheckpointMemo, unpersist_checkpoints
 from .dedup import (
-    A_CONST,
-    B_CONST,
     JACCARD_THRESHOLD,
-    N_BANDS,
-    N_PERM,
-    P_MINHASH,
     _SQL_SHINGLES,
-    _spark_hashed_from,
+    _shingle_hash,
+    band_pairs,
     minhash_bands_from_hashed,
     shingle_arrays_from_docs,
+    shingle_hash_arrays,
+    sql_bands,
 )
 from .registry import query
 
@@ -141,21 +139,21 @@ class BatchDedupResult(NamedTuple):
 
 def batch_signatures(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(hashed, bands, pre): distinct (doc_id, h) shingle fingerprints
-    and (doc_id, band_key) LSH bands for a (doc_id, text, ...) relation,
-    with the same double lineage cut as the corpus pipeline (the
-    pre-explode checkpoint defuses the Generate-collapse O(tokens ×
-    shingles) trap, dedup.py:94-100; the post-hash cut is consumed by
-    both the band build and verification). ``pre`` is returned so the
+    and (doc_id, band_key) LSH bands for a (doc_id, text, ...) relation.
+    ``pre``, the checkpointed shingle arrays, feeds the band kernel its
+    hash arrays and defuses the Generate-collapse trap for the explode
+    (dedup._spark_shingles_materialized). ``pre`` is returned so the
     caller can free it — it hides inside the others' RDD lineage."""
     pre = shingle_arrays_from_docs(docs).localCheckpoint(eager=False)
     sh = pre.select("doc_id", F.explode("shingles").alias("s"))
     hashed = (
-        _spark_hashed_from(sh)
-        .select("doc_id", "h")
+        sh.select("doc_id", _shingle_hash(F.col("s")).alias("h"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    bands = minhash_bands_from_hashed(hashed).localCheckpoint(eager=False)
+    bands = minhash_bands_from_hashed(shingle_hash_arrays(pre)).localCheckpoint(
+        eager=False
+    )
     return hashed, bands, pre
 
 
@@ -193,10 +191,11 @@ def build_dedup_index(
        the dedup adds no exchange;
     3. the distinct relation is written straight to the bucketed
        shingles table (aligned pre-shuffle → one file per bucket);
-    4. the band/MinHash aggregation reads the PERSISTED bucketed table
-       — groupBy on the bucket key is exchange-free — instead of a
-       cached relation, and its output shuffles once onto band_key for
-       the aligned bands write.
+    4. the band kernel reads each document's hash array collected from
+       the PERSISTED bucketed table — the ``collect_list`` groupBy on
+       the bucket key is exchange-free — instead of a cached relation,
+       and its output shuffles once onto band_key for the aligned bands
+       write.
 
     Probe paths keep batch_signatures unchanged: micro-batches are
     small, and their checkpoints are reused across 2-3 plan branches
@@ -207,14 +206,16 @@ def build_dedup_index(
     )
     pre = shingle_arrays_from_docs(docs).repartition(par, F.col("doc_id"))
     sh = pre.select("doc_id", F.explode("shingles").alias("s"))
-    hashed = _spark_hashed_from(sh).select("doc_id", "h").distinct()
+    hashed = sh.select("doc_id", _shingle_hash(F.col("s")).alias("h")).distinct()
     idx = DedupIndex(f"{name}_bands", f"{name}_shingles")
     write_bucketed_aligned(
         hashed, idx.shingles_table, os.path.join(path, "shingles"),
         "doc_id", n_buckets,
     )
     persisted = spark.table(idx.shingles_table)
-    bands = minhash_bands_from_hashed(persisted)
+    bands = minhash_bands_from_hashed(
+        persisted.groupBy("doc_id").agg(F.collect_list("h").alias("hs"))
+    )
     write_bucketed_aligned(
         bands, idx.bands_table, os.path.join(path, "bands"),
         "band_key", n_buckets,
@@ -230,9 +231,9 @@ def build_dedup_index(
 
 def _verify_hashed(cand: DataFrame, sh: DataFrame) -> DataFrame:
     """Exact Jaccard over distinct 32-bit shingle fingerprints for
-    candidate pairs ``cand(da, db)`` against ``sh(doc_id, h)`` —
-    dedup._spark_verify's shape, re-keyed on h because the index
-    persists fingerprints, not shingle text."""
+    candidate pairs ``cand(da, db)`` against ``sh(doc_id, h)`` rows —
+    the row form of dedup._spark_verify, because the index persists
+    fingerprint rows, not shingle text or per-document arrays."""
     counts = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = sh.select(F.col("doc_id").alias("da"), "h")
     b = sh.select(F.col("doc_id").alias("db_r"), F.col("h").alias("h_r"))
@@ -296,19 +297,8 @@ def dedup_batch_against_index(
         .select("bid", "iid")                  # contract; guards misuse
         .distinct()
     )
-    # within probe: batch self-join (same shape as _compute_minhash_lsh;
-    # at realistic batch sizes this is small either way)
-    within = (
-        b_bands.select("band_key", F.col("doc_id").alias("da"))
-        .join(
-            b_bands.select(
-                F.col("band_key").alias("bk2"), F.col("doc_id").alias("db")
-            ),
-            (F.col("band_key") == F.col("bk2")) & (F.col("da") < F.col("db")),
-        )
-        .select("da", "db")
-        .distinct()
-    )
+    # within probe: the batch's own band self-join
+    within = band_pairs(b_bands)
 
     # verification: prune the corpus shingle index to candidate docs
     # FIRST (semi-join on its bucket key doc_id), so the intersect join
@@ -634,31 +624,9 @@ def verified_pairs_cte(exclude: str = "FALSE") -> str:
     against literally the same monolithic recompute. Claims CTE names:
     toks, sh, hashed (via dedup._SQL_SHINGLES), hsh, sigs, sigs2,
     bands, cand, counts, inter, verified."""
-    mins = ",\n         ".join(
-        f"MIN((h * {A_CONST[j]} + {B_CONST[j]}) % {P_MINHASH}) AS mh{j}"
-        for j in range(N_PERM)
-    )
-    bands = ",\n      ".join(
-        f"(SELECT '{b}_' || CAST(mh{2 * b} AS VARCHAR) || '_' ||"
-        f" CAST(mh{2 * b + 1} AS VARCHAR)) AS band{b}"
-        for b in range(N_BANDS)
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, band{b} AS band_key FROM sigs2" for b in range(N_BANDS)
-    )
     return f"""{_SQL_SHINGLES},
     hsh AS (SELECT DISTINCT doc_id, h FROM hashed WHERE NOT ({exclude})),
-    sigs AS (
-      SELECT doc_id,
-         {mins}
-      FROM hsh GROUP BY doc_id
-    ),
-    sigs2 AS (
-      SELECT doc_id,
-      {bands}
-      FROM sigs
-    ),
-    bands AS ({band_rows}),
+    {sql_bands("hsh")},
     cand AS (
       SELECT a.doc_id AS da, b.doc_id AS db
       FROM bands a JOIN bands b ON a.band_key = b.band_key AND a.doc_id < b.doc_id

@@ -3,7 +3,8 @@
 Usage: python tools/time_queries.py <query> [query ...]
 
 One untimed warm run, then three timed full collect()s per query;
-prints per-query median (the bench statistic) plus the raw runs.
+prints per-query median (the bench statistic), the number of classes
+the timed runs compiled (codegen-cache misses) and the raw runs.
 Uses the engine's tuned session at $SPARK_GRAFT_CPUS cores and
 $SPARK_GRAFT_SF_DIR (default sf0.1, matching bench.py), so numbers
 are comparable to BENCH_FULL.json warm medians taken on the same
@@ -27,7 +28,7 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as entrymod
-    from postgresql_transfer_tool_spark.session import get_spark
+    from postgresql_transfer_tool_spark.session import codegen_compiles, get_spark
 
     spark = get_spark("time-queries")
     qs = entrymod.queries()
@@ -36,6 +37,7 @@ def main() -> int:
         spark.sparkContext.setJobDescription(f"warm: {name}")
         fn(spark, sf_dir).collect()
         runs = []
+        c0 = codegen_compiles(spark)
         for i in range(3):
             spark.sparkContext.setJobDescription(f"timed {i}: {name}")
             t0 = time.monotonic()
@@ -43,6 +45,7 @@ def main() -> int:
             runs.append(time.monotonic() - t0)
         print(
             f"{name}: median {statistics.median(runs):.3f}s "
+            f"compiles {codegen_compiles(spark) - c0} "
             f"runs {[round(r, 3) for r in runs]}",
             flush=True,
         )
